@@ -68,8 +68,3 @@ def require_columns(df: DataFrame, required: list[str]) -> DataFrame:
     if missing:
         raise ValueError(f"missing required columns: {missing}; have {df.columns}")
     return df
-
-
-def drop_null_rows(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """``df.dropna()`` parity (reference report_processor.py:158)."""
-    return df.na.drop(subset=subset)

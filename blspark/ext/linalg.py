@@ -56,7 +56,13 @@ def covariance_matrix(
     """ONE row: n (long), trace (double), cov (array<array<double>>,
     dim x dim, sample covariance with 1/n normalization). Exact
     integer moments on the 2^-40 grid; pinned double arithmetic
-    (module doc)."""
+    (module doc).
+
+    ``dim`` must equal the length of every stored vector: components
+    are read by position 1..dim with ``element_at``, so under ANSI mode
+    a shorter vector aborts the job, and without ANSI its missing
+    components read as null and add nothing to the sums; components
+    past ``dim`` are ignored."""
     # ONE corpus pass, ZERO corpus exchanges (optimization r17, guide
     # §2.4): each row quantizes its vector ONCE into a d-element
     # decimal array, posexplodes it, and a second explode over the

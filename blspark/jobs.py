@@ -10,6 +10,15 @@ file and the newest population document in the mirror, load + clean
 both, run Q1/Q2/Q3, and return the three reports (DataFrames plus the
 reference's record-dict response shape).
 
+Discovery is driver-side: the data directory is listed with
+``os.listdir``, the newest population document is the lexicographic max
+of the listed names (the timestamps sort), and the BLS header line is
+read from the local file and handed to the TSV scan as an all-string
+schema. So building the three report frames launches ONE Spark job —
+the population document's JSON schema inference — and an arrival
+micro-batch launches two (the stream's ``isEmpty`` guard plus that one)
+before its reports are collected.
+
 Everything is local-filesystem-backed and fetcher-injectable so the full
 pipeline runs (and is tested) offline; on a cluster the same code points
 at object-store paths.
@@ -19,14 +28,18 @@ from __future__ import annotations
 
 import json
 import os
+from collections import Counter
 from collections.abc import Callable
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from blspark.clean import coerce_numeric, resolve_column, trim_string_columns
 from blspark.io.ingest import fetch_url_with_md5, stage_remote_distributed
-from blspark.io.manifest import file_manifest, local_listing, newest_key
+# report_job applies newest_key's rule to its own listing; the name stays
+# bound here for callers and tracers that look it up on this module
+from blspark.io.manifest import file_manifest, local_listing, newest_key  # noqa: F401
 from blspark.io.readers import read_json_records, read_padded_tsv
 from blspark.io.sinks import timestamped_name
 from blspark.queries.bls import best_years, combined_report_safe, population_stats
@@ -83,20 +96,81 @@ def fetch_population_job(
     return name
 
 
+# Hadoop picks a decompression codec by file suffix; the driver-side
+# header read cannot, so such files keep Spark's header inference.
+_CODEC_SUFFIXES = (".gz", ".bz2", ".deflate", ".lz4", ".snappy", ".zst")
+# Characters Spark's CSV parser does not take literally in a header: the
+# quote, NUL (the unset comment character) and a byte-order mark.
+_PARSER_SPECIAL = ('"', "\0", "\ufeff")
+
+
+def _first_header_line(path: str) -> str | None:
+    r"""The line Spark's CSV source takes as the header: the first one
+    that is not empty once spaces are trimmed, lines split at ``\n``,
+    ``\r\n`` or a lone ``\r`` as Hadoop's line reader splits them.
+    None when there is no such line or it is not valid UTF-8."""
+    with open(path, "rb") as f:
+        for chunk in f:
+            for raw in chunk.rstrip(b"\n").split(b"\r"):
+                if raw.strip(b" "):
+                    try:
+                        return raw.decode("utf-8")
+                    except UnicodeDecodeError:
+                        return None
+    return None
+
+
+def tsv_header_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """All-string schema of a local tab-separated file, read from its
+    header line on the driver — the names Spark's own header inference
+    gives ``read_padded_tsv(spark, path)``, without the job it launches.
+
+    The header is split at tabs and renamed as Spark renames it: a blank
+    field becomes ``_c<i>``, and a name that occurs more than once
+    (case-insensitively unless ``spark.sql.caseSensitive``) gets its
+    index appended. Padding is kept; ``read_padded_tsv`` strips the
+    names. Returns None — so the caller falls back to Spark's inference,
+    including its failure on a file without a header — for a compressed
+    file, a file with no non-blank line, undecodable bytes, or a header
+    holding a character Spark's CSV parser treats specially."""
+    if path.endswith(_CODEC_SUFFIXES):
+        return None
+    line = _first_header_line(path)
+    if line is None or any(c in line for c in _PARSER_SPECIAL):
+        return None
+    fields = line.split("\t")
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive", "false").lower()
+    keys = [f if case_sensitive == "true" else f.lower() for f in fields]
+    counts = Counter(keys)
+    names = [
+        f"_c{i}" if not f else f"{f}{i}" if counts[k] > 1 else f
+        for i, (f, k) in enumerate(zip(fields, keys))
+    ]
+    return T.StructType([T.StructField(n, T.StringType()) for n in names])
+
+
 def report_job(spark: SparkSession, data_dir: str) -> dict:
     """EP2 — the event-driven report (reference report_processor.py:
-    284-353): discovery (S10), load (S8/S9), clean (P2-P8), Q1-Q3."""
-    from blspark.io.manifest import listing_manifest
+    284-353): discovery (S10), load (S8/S9), clean (P2-P8), Q1-Q3.
 
+    Discovery runs on the driver over a local listing: the BLS data file
+    is the first name containing ``pr.data.0.Current``, the population
+    document the lexicographic max of the ``population_data_*.json``
+    names (``newest_key``'s rule), and the data file's header comes from
+    ``tsv_header_schema``. Building the three frames launches at most one
+    Spark job, the population document's JSON schema inference; the
+    reports run when the caller collects them."""
     files = local_listing(data_dir)
-    manifest = listing_manifest(spark, {f: "" for f in files})
-
     bls_file = next((f for f in files if "pr.data.0.Current" in f), None)
-    pop_file = newest_key(manifest, "population_data_", ".json")
+    pop_file = max(
+        (f for f in files if f.startswith("population_data_") and f.endswith(".json")),
+        default=None,
+    )
 
     df_bls = None
     if bls_file:
-        raw = read_padded_tsv(spark, os.path.join(data_dir, bls_file))
+        path = os.path.join(data_dir, bls_file)
+        raw = read_padded_tsv(spark, path, schema=tsv_header_schema(spark, path))
         df_bls = coerce_numeric(
             trim_string_columns(raw), {"year": "int", "value": "double"}
         )

@@ -17,6 +17,13 @@ import os
 from pyspark.sql import SparkSession
 
 
+def is_local_master(master: str) -> bool:
+    """True for the single-JVM local masters ``local`` and ``local[...]``
+    (``local[4]``, ``local[*]``, ``local[4,2]``), False for
+    ``local-cluster[...]`` and every cluster master."""
+    return master == "local" or master.startswith("local[")
+
+
 def get_spark(
     app_name: str = "blspark",
     master: str | None = None,
@@ -64,13 +71,14 @@ def get_spark(
     # single-row-group, so a pure map-side pipeline would run its
     # whole downstream stage in the scan's one task. Locally we
     # round-robin the compact projection across the cores first.
-    # Gated on a local master (ADVICE r16): a cluster session built
-    # through this factory must NOT silently pay the repartition
-    # exchange — at scale the scan's own row-group parallelism
-    # suffices and these passes perform no exchange at all, which is
-    # the point of the fold. Cluster callers can still opt in via
-    # extra_conf.
-    if master.startswith("local"):
+    # Gated on a single-JVM local master, ``local`` or ``local[...]``,
+    # not ``local-cluster[...]``, whose executors are separate JVMs: a
+    # cluster session built through this factory must NOT silently pay
+    # the repartition exchange — at scale the scan's own row-group
+    # parallelism suffices and these passes perform no exchange at
+    # all, which is the point of the fold. Cluster callers can still
+    # opt in via extra_conf.
+    if is_local_master(master):
         builder = builder.config(
             "blspark.assign.localParallelism", str(shuffle_partitions)
         )

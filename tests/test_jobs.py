@@ -5,14 +5,21 @@ notebook's golden outputs."""
 from __future__ import annotations
 
 import datetime as dt
+import gzip
 import json
 import os
 
+import pytest
+from pyspark.errors import AnalysisException
+
+from blspark import jobs
+from blspark.io.readers import read_padded_tsv
 from blspark.jobs import (
     fetch_population_job,
     report_job,
     run_report_on_arrival,
     sync_job,
+    tsv_header_schema,
 )
 
 BLS_TSV = (
@@ -114,6 +121,184 @@ def test_report_on_arrival_trigger(spark, tmp_path):
     assert round(results[0]["population_stats"].first()["mean_population"], 2) == (
         322069808.00
     )
+
+
+class _JobCount:
+    """Spark jobs launched inside the ``with`` block, counted as
+    perfbench/spans.py counts them: job ids are sequential, so the jobs
+    are the ids after a marker job launched on entry."""
+
+    def __init__(self, spark):
+        self._sc = spark.sparkContext
+        self._tracker = self._sc.statusTracker()
+
+    def _drain(self):
+        # the status tracker is fed from Spark's listener bus
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
+
+    def __enter__(self):
+        self._drain()
+        before = set(self._tracker.getJobIdsForGroup(None))
+        self._sc.parallelize([0], 1).count()
+        self._drain()
+        self._marker = max(set(self._tracker.getJobIdsForGroup(None)) - before)
+        return self
+
+    def __exit__(self, *exc):
+        self._drain()
+        last = self._marker
+        while self._tracker.getJobInfo(last + 1) is not None:
+            last += 1
+        self.jobs = last - self._marker
+
+
+def _fetch(mirror, day):
+    return fetch_population_job(
+        str(mirror),
+        fetch=lambda url: json.dumps(POP_JSON).encode(),
+        now=dt.datetime(2024, 1, day, 12, 0, 0),
+    )
+
+
+def test_report_path_job_budget(spark, tmp_path):
+    """Discovery and the BLS header are resolved on the driver: building
+    the three report frames launches only the population document's JSON
+    schema inference, and an arrival micro-batch adds only the stream's
+    isEmpty guard."""
+    remote = _make_remote(tmp_path)
+    mirror = tmp_path / "mirror"
+    ckpt = tmp_path / "ckpt"
+    sync_job(spark, str(remote), str(mirror))
+    _fetch(mirror, 1)
+    _fetch(mirror, 2)  # two documents: the newest must be found
+
+    with _JobCount(spark) as built:
+        reports = report_job(spark, str(mirror))
+    assert built.jobs <= 1
+    assert reports["population_stats"].first()["year_count"] == 6
+
+    results: list = []
+    run_report_on_arrival(spark, str(mirror), str(ckpt), results)
+    seen = len(results)
+    _fetch(mirror, 3)
+    with _JobCount(spark) as arrival:
+        run_report_on_arrival(spark, str(mirror), str(ckpt), results)
+    assert arrival.jobs <= 2
+    assert len(results) == seen + 1  # one micro-batch for the one arrival
+
+
+def test_report_picks_newest_population_document(spark, tmp_path):
+    mirror = tmp_path / "mirror"
+    mirror.mkdir()
+    (mirror / "pr.data.0.Current").write_text(BLS_TSV)
+    old = {"data": [{"Year": 2013, "Population": 1.0}]}
+    for name, doc in [
+        ("population_data_20240101_120000.json", old),
+        ("population_data_20240301_120000.json", POP_JSON),
+        ("population_data_20240201_120000.json", old),
+        ("population_data_20249999.txt", old),  # wrong suffix: not a document
+    ]:
+        (mirror / name).write_text(json.dumps(doc))
+    q1 = report_job(spark, str(mirror))["population_stats"].first()
+    assert q1["year_count"] == 6
+
+
+_ROWS = [
+    ("PRS30006032      ", "2013", "Q01", "         2.5", ""),
+    ("PRS30006032      ", "2013", "Q05", "         2.0", ""),
+    ("PRS30006011      ", "2014", "Q01", "         bad", ""),
+]
+_BLS_NAMES = ["series_id", "year", "period", "value", "footnote_codes"]
+# data files whose header the driver must name exactly as Spark does:
+# case -> (file text, column names after read_padded_tsv)
+HEADER_CASES = {
+    "padded_reordered": (
+        "       value\tfootnote_codes\t period \tyear   \tseries_id        \n"
+        + "".join(f"{v}\t{f}\t{p}\t{y}\t{s}\n" for s, y, p, v, f in _ROWS),
+        ["value", "footnote_codes", "period", "year", "series_id"],
+    ),
+    "crlf": (BLS_TSV.replace("\n", "\r\n"), _BLS_NAMES),
+    # blank field -> _c2; a case-insensitive duplicate gets its index
+    "blank_and_duplicate": (
+        "series_id        \tyear\t\tperiod\t       value\tnote\tNOTE\n"
+        + "".join(f"{s}\t{y}\tx\t{p}\t{v}\ta\tb\n" for s, y, p, v, _ in _ROWS),
+        ["series_id", "year", "_c2", "period", "value", "note5", "NOTE6"],
+    ),
+    "header_only": (BLS_TSV.split("\n")[0] + "\n", _BLS_NAMES),
+}
+
+
+def _mirror_with(tmp_path, name, tsv):
+    mirror = tmp_path / name
+    mirror.mkdir()
+    with open(mirror / "pr.data.0.Current", "w", newline="") as f:
+        f.write(tsv)
+    _fetch(mirror, 1)
+    return mirror
+
+
+def _collected(reports):
+    return {k: None if v is None else v.collect() for k, v in reports.items()}
+
+
+@pytest.mark.parametrize("case", sorted(HEADER_CASES))
+def test_driver_header_matches_spark_inference(spark, tmp_path, monkeypatch, case):
+    tsv, names = HEADER_CASES[case]
+    mirror = _mirror_with(tmp_path, case, tsv)
+    path = str(mirror / "pr.data.0.Current")
+
+    schema = tsv_header_schema(spark, path)
+    assert schema is not None  # resolved on the driver, no fallback
+    raw = read_padded_tsv(spark, path, schema=schema)
+    inferred = read_padded_tsv(spark, path)
+    assert raw.columns == inferred.columns == names
+    assert raw.collect() == inferred.collect()
+
+    got = _collected(report_job(spark, str(mirror)))
+    # the reference: report_job with Spark inferring the header
+    monkeypatch.setattr(jobs, "tsv_header_schema", lambda spark, path: None)
+    want = _collected(report_job(spark, str(mirror)))
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "header",
+    ["\ufeffseries_id\tyear\tperiod\tvalue", '"series_id"\tyear\tperiod\tvalue'],
+    ids=["byte_order_mark", "quoted"],
+)
+def test_parser_special_header_keeps_spark_inference(spark, tmp_path, header):
+    """Spark's CSV parser drops a byte-order mark and unquotes fields: the
+    driver leaves such headers to Spark's own inference."""
+    mirror = _mirror_with(tmp_path, "special", header + "\nPRS1\t2013\tQ01\t1.0\n")
+    path = str(mirror / "pr.data.0.Current")
+    assert tsv_header_schema(spark, path) is None
+    names = read_padded_tsv(spark, path).columns
+    assert names == ["series_id", "year", "period", "value"]
+
+
+def test_compressed_data_file_keeps_spark_inference(spark, tmp_path):
+    """Spark decompresses by file suffix; the driver-side header read
+    leaves compressed data files to Spark."""
+    plain = _mirror_with(tmp_path, "plain", BLS_TSV)
+    packed = tmp_path / "packed"
+    packed.mkdir()
+    with gzip.open(packed / "pr.data.0.Current.gz", "wt") as f:
+        f.write(BLS_TSV)
+    assert tsv_header_schema(spark, str(packed / "pr.data.0.Current.gz")) is None
+    got = report_job(spark, str(packed))["best_years"].collect()
+    assert got == report_job(spark, str(plain))["best_years"].collect()
+
+
+def test_empty_data_file_fails_as_with_spark_inference(spark, tmp_path, monkeypatch):
+    mirror = _mirror_with(tmp_path, "empty", "")
+    assert tsv_header_schema(spark, str(mirror / "pr.data.0.Current")) is None
+    with pytest.raises(AnalysisException) as got:
+        report_job(spark, str(mirror))
+    monkeypatch.setattr(jobs, "tsv_header_schema", lambda spark, path: None)
+    with pytest.raises(AnalysisException) as want:
+        report_job(spark, str(mirror))
+    assert got.value.getCondition() == want.value.getCondition()
+    assert "year" in str(got.value)
 
 
 def test_cli_main_list_query_oracle_sync(spark, tmp_path, capsys):
