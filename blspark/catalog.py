@@ -31,11 +31,15 @@ result columns — including nested inside STRUCT/MAP/LIST types.
 
 from __future__ import annotations
 
+import os
+import stat
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -447,6 +451,83 @@ def registry() -> dict[str, Query]:
     return ordered
 
 
+def file_signature(path: str) -> tuple | None:
+    """What a local table's content is known by without reading it:
+    ``(st_size, st_mtime_ns)`` of a file, or ``(relative name, st_size,
+    st_mtime_ns)`` of every file below a directory, sorted. ``path`` may
+    be a plain path or a ``file:`` URI (what ``DataFrame.inputFiles()``
+    returns). None for a non-local path or one that cannot be stat'ed:
+    such a table has no signature, so nothing keyed on it is memoized."""
+    parsed = urlparse(path)
+    if parsed.scheme not in ("", "file"):
+        return None
+    local = unquote(parsed.path) if parsed.scheme else path
+    try:
+        st = os.stat(local)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((st.st_size, st.st_mtime_ns),)
+        sig = []
+        for root, dirs, files in os.walk(local):
+            dirs.sort()
+            for f in sorted(files):
+                fst = os.stat(os.path.join(root, f))
+                rel = os.path.relpath(os.path.join(root, f), local)
+                sig.append((rel, fst.st_size, fst.st_mtime_ns))
+        return tuple(sig)
+    except OSError:
+        return None
+
+
+def _frame_key(df: DataFrame) -> tuple:
+    # the analyzed plan says WHAT the frame computes (path, filters);
+    # the signatures of the files it reads say over WHICH content — two
+    # reads of one path hash alike whatever the file holds
+    return (
+        df._jdf.queryExecution().analyzed().semanticHash(),
+        tuple((f, file_signature(f)) for f in sorted(df.inputFiles())),
+    )
+
+
+def session_memo(
+    memo: dict, spark: SparkSession, key, build, frames: tuple = ()
+):
+    """The ONE copy of the per-session memo mechanism (the in-memory
+    sibling of _layout_tables): keyed by (session, ``key``) because a
+    memoized DataFrame/checkpoint is bound to the SparkSession that
+    built it — serving it to a LATER session in the same process
+    (test fixtures stop and recreate sessions) would raise
+    "SparkContext has been shut down" or read a checkpoint RDD that
+    no longer exists. Entries of dead sessions are evicted on sight
+    (they can never be served again), so the memo holds at most the
+    LIVE session's entries — no unbounded growth across session
+    restarts. ``build()`` runs once per (live session, key, frames).
+
+    ``frames``: input DataFrames whose ANALYZED-PLAN SEMANTIC HASH and
+    input-file signatures (``file_signature``) join the key — for
+    memos whose value is a function of a caller-supplied frame, not
+    just the dataset path. A filtered/eval-sample frame then hashes
+    to its own entry and can never be served (or poison the cache
+    with) the full-corpus artifact, and a table rewritten in place
+    gets a fresh build instead of the old content's artifact. Files
+    that are not local have no signature and key by name only.
+
+    Two threads missing one key may both build; the later store wins,
+    and either value is what a fresh computation gives."""
+    app = spark.sparkContext.applicationId
+    for stale in [k for k in list(memo) if k[0] != app]:
+        memo.pop(stale, None)
+    full_key = (app, key, *(_frame_key(f) for f in frames))
+    got = memo.get(full_key)
+    if got is None:
+        got = build()
+        memo[full_key] = got
+    return got
+
+
+# (session, table path, file signature) -> inferred parquet schema
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one star-schema table. `events.parquet` stores TIMESTAMP(NANOS);
     Spark's reader delivers it differently by version — pyspark <=4.1.1
@@ -454,14 +535,37 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     4.1.2+ reads it as TIMESTAMP_NTZ truncated to micros. Normalize both
     paths to a UTC session-TZ TIMESTAMP with nanos *truncated* (floored)
     to micros, matching DuckDB's `CAST(ts AS TIMESTAMP)` — verified
-    value-identical on sample rows for the 4.1.2 NTZ path."""
+    value-identical on sample rows for the 4.1.2 NTZ path.
+
+    Schema memo: the parquet schema inference (a Spark job) runs once
+    per table for the live session, keyed on (session, path,
+    ``file_signature``), so a table rewritten in place — a changed size
+    or mtime of the file or of any file below its directory — is
+    inferred afresh. Every call still returns a fresh
+    ``spark.read.schema(...).parquet(path)``: two handles of one table
+    are separate relations with distinct attribute ids, so self-joins
+    behave as with uninferred reads. A non-local path is never
+    memoized and infers on every call."""
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         try:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass
-        return normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    sig = file_signature(path)
+    inferred: list[DataFrame] = []
+
+    def infer() -> StructType:
+        inferred.append(spark.read.parquet(path))
+        return inferred[0].schema
+
+    if sig is None:
+        df = spark.read.parquet(path)
+    else:
+        schema = session_memo(_SCHEMAS, spark, (path, sig), infer)
+        # a miss serves the inferring read itself: no second file listing
+        df = inferred[0] if inferred else spark.read.schema(schema).parquet(path)
+    return normalize_event_ts(df) if name == "events" else df
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

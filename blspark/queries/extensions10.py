@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from blspark.catalog import dsum, load_table, o_dsum, register
+from blspark.catalog import dsum, load_table, o_dsum, register, session_memo
 from blspark.queries.extensions9 import (
     _DOTQ,
     _NORMQ,
@@ -527,48 +527,13 @@ def x_maxsim_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # deliberately charge TRAINING to every run (the bench prices the full
 # pipeline); this variant prices the steady state, so the bench
 # separates the two (VERDICT r9 item 8). The index is memoized per
-# sf_dir: first call (bench.py's COLD pass) trains + encodes +
-# localCheckpoints the codes frame (corpus-shaped but tiny — M int
-# codes per vector; a checkpoint, not a cache-manager entry, so
-# clearCache() between bench queries cannot drop it and it never
-# shadows another query's plan); warm passes reuse it.
-_WARM_IVFPQ_INDEX: dict[tuple[str, str], tuple] = {}
-
-
-def _session_memo(
-    memo: dict, spark: SparkSession, sf_dir: str, build, frames: tuple = ()
-):
-    """The ONE copy of the warm-artifact memo mechanism (the in-memory
-    sibling of _layout_tables): keyed by (session, dataset) because a
-    memoized DataFrame/checkpoint is bound to the SparkSession that
-    built it — serving it to a LATER session in the same process
-    (test fixtures stop and recreate sessions) would raise
-    "SparkContext has been shut down" or read a checkpoint RDD that
-    no longer exists. Entries of dead sessions are evicted on sight
-    (they can never be served again), so the memo holds at most the
-    LIVE session's datasets — no unbounded growth across session
-    restarts. ``build()`` runs once per (live session, dataset).
-
-    ``frames``: input DataFrames whose ANALYZED-PLAN SEMANTIC HASH
-    joins the key (the _DET_CENTROIDS_MEMO device) — for memos whose
-    value is a function of a caller-supplied frame, not just the
-    dataset path. A filtered/eval-sample frame then hashes to its own
-    entry and can never be served (or poison the cache with) the
-    full-corpus artifact; the key captures WHAT was computed rather
-    than relying on a docstring contract (ADVICE r14)."""
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in memo if k[0] != app]:
-        del memo[stale]
-    key = (
-        app,
-        sf_dir,
-        *(f._jdf.queryExecution().analyzed().semanticHash() for f in frames),
-    )
-    got = memo.get(key)
-    if got is None:
-        got = build()
-        memo[key] = got
-    return got
+# sf_dir and embeddings file content (session_memo): first call
+# (bench.py's COLD pass) trains + encodes + localCheckpoints the codes
+# frame (corpus-shaped but tiny — M int codes per vector; a checkpoint,
+# not a cache-manager entry, so clearCache() between bench queries
+# cannot drop it and it never shadows another query's plan); warm
+# passes reuse it.
+_WARM_IVFPQ_INDEX: dict[tuple, tuple] = {}
 
 
 def _ivfpq_warm_index(spark: SparkSession, sf_dir: str):
@@ -586,7 +551,10 @@ def _ivfpq_warm_index(spark: SparkSession, sf_dir: str):
         ).localCheckpoint(eager=True)
         return (vecs, cents, cb, codes)
 
-    return _session_memo(_WARM_IVFPQ_INDEX, spark, sf_dir, build)
+    return session_memo(
+        _WARM_IVFPQ_INDEX, spark, sf_dir, build,
+        frames=(load_table(spark, sf_dir, "embeddings"),),
+    )
 
 
 @register(
@@ -1035,7 +1003,7 @@ def x_knn_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # session-keyed memo of the mutual-edge pair list (compact id pairs,
 # localCheckpoint — survives bench.py's clearCache(), the
 # _WARM_IVFPQ_INDEX convention including its dead-session eviction)
-_WARM_KNN_EDGES: dict[tuple[str, str], tuple] = {}
+_WARM_KNN_EDGES: dict[tuple, tuple] = {}
 
 
 def _warm_knn_pairs(spark: SparkSession, sf_dir: str):
@@ -1046,7 +1014,10 @@ def _warm_knn_pairs(spark: SparkSession, sf_dir: str):
             nodes.localCheckpoint(eager=True),
         )
 
-    return _session_memo(_WARM_KNN_EDGES, spark, sf_dir, build)
+    return session_memo(
+        _WARM_KNN_EDGES, spark, sf_dir, build,
+        frames=(load_table(spark, sf_dir, "embeddings"),),
+    )
 
 
 @register(
@@ -1389,7 +1360,7 @@ def x_retrieval_graph_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
 # session-keyed memo of the navigation adjacency (compact id pairs,
 # already localCheckpointed by graph_adjacency — the _WARM_KNN_EDGES
 # convention including dead-session eviction)
-_WARM_GX_ADJ: dict[tuple[str, str], object] = {}
+_WARM_GX_ADJ: dict[tuple, object] = {}
 
 
 @register(
@@ -1427,7 +1398,9 @@ def x_retrieval_graph_expand_warm(
             protos.select("prototype_id"), "prototype_id bigint"
         )
 
-    adj, protos = _session_memo(_WARM_GX_ADJ, spark, sf_dir, build)
+    adj, protos = session_memo(
+        _WARM_GX_ADJ, spark, sf_dir, build, frames=(emb,)
+    )
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
     return graph_expand_topk(
         emb,
@@ -1617,7 +1590,7 @@ def x_retrieval_graph_expand_xcell(
 # prototype backbone, compact id pairs, already localCheckpointed by
 # graph_adjacency_xcell — the _WARM_GX_ADJ convention including
 # dead-session eviction)
-_WARM_GXX_ADJ: dict[tuple[str, str], object] = {}
+_WARM_GXX_ADJ: dict[tuple, object] = {}
 
 
 @register(
@@ -1662,7 +1635,9 @@ def x_retrieval_graph_expand_xcell_warm(
             protos.select("prototype_id"), "prototype_id bigint"
         )
 
-    adj, protos = _session_memo(_WARM_GXX_ADJ, spark, sf_dir, build)
+    adj, protos = session_memo(
+        _WARM_GXX_ADJ, spark, sf_dir, build, frames=(emb,)
+    )
     queries = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 15))
     return graph_expand_topk(
         emb,

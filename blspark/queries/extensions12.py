@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from blspark.catalog import load_table, register
+from blspark.catalog import load_table, register, session_memo
 from blspark.queries.extensions9 import (
     _CODESC_CTE,
     _DOTQ,
@@ -71,7 +71,6 @@ from blspark.queries.extensions10 import (
     _gx_chain,
     _layout_tables,
     _recall_contract,
-    _session_memo,
 )
 from blspark.queries.extensions11 import (
     _ADAPT_HI,
@@ -435,7 +434,7 @@ def graph_edge_table(spark: SparkSession, sf_dir: str) -> str:
     )[0]
 
 
-_GXIDX_PROTOS: dict[tuple[str, str], object] = {}
+_GXIDX_PROTOS: dict[tuple, object] = {}
 
 
 def graph_index_protos(spark: SparkSession, sf_dir: str, emb, cents,
@@ -446,10 +445,10 @@ def graph_index_protos(spark: SparkSession, sf_dir: str, emb, cents,
     across query batches, so a warm probe pays ZERO corpus
     aggregations before the walk (the prototype argmax previously
     re-ran per call). Keyed per (session, dataset, input plans) with
-    dead-session eviction (_session_memo): ``emb``/``cents``' analyzed
-    semantic hashes join the key (via ``frames=``), so an eval-sample
-    filter hashes to its own entry instead of being served the
-    full-corpus prototypes. ``assigned``: optional shared
+    dead-session eviction (catalog.session_memo): ``emb``/``cents``'
+    analyzed semantic hashes and input-file signatures join the key
+    (via ``frames=``), so an eval-sample filter hashes to its own
+    entry instead of being served the full-corpus prototypes. ``assigned``: optional shared
     ``assign_corpus`` pass — the edge-table build pre-seeds the memo
     with it so the cold path's prototype argmax rides the build's one
     corpus scan (``assigned`` is NOT part of the key: by construction
@@ -458,7 +457,7 @@ def graph_index_protos(spark: SparkSession, sf_dir: str, emb, cents,
     from blspark.ext.similarity import cell_prototypes
     from blspark.ops import local_relation
 
-    return _session_memo(
+    return session_memo(
         _GXIDX_PROTOS, spark, sf_dir,
         lambda: local_relation(
             cell_prototypes(emb, cents, assigned=assigned).select(

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from blspark.catalog import load_table, register
+from blspark.catalog import load_table, register, session_memo
 from blspark.queries.extensions9 import _DOTQ
 from blspark.queries.extensions10 import _SQ8_EVAL_N, _recall_contract
 
@@ -114,7 +114,7 @@ WHERE rank <= {_BQ_K}
 # trained artifact of the binary family (the graph_index_protos
 # sibling): FULL-corpus thresholds only — the eval's filtered sample
 # keeps its own per-call pass by construction.
-_BQ_THR_MEMO: dict[tuple[str, str], object] = {}
+_BQ_THR_MEMO: dict[tuple, object] = {}
 
 
 def binary_thresholds_cached(spark: SparkSession, sf_dir: str, vecs):
@@ -122,14 +122,13 @@ def binary_thresholds_cached(spark: SparkSession, sf_dir: str, vecs):
     one row) — computed once per (session, dataset, input plan) and
     served to every later binary probe, the deployment shape where
     thresholds are trained offline with the index. ``vecs``' analyzed
-    semantic hash joins the memo key (via ``_session_memo(frames=)``),
+    semantic hash joins the memo key (via ``session_memo(frames=)``),
     so a filtered/eval-sample frame gets its own thresholds rather
     than being served — or poisoning — the full-corpus entry."""
     from blspark.ext.binaryq import binary_thresholds
     from blspark.ops import local_relation
-    from blspark.queries.extensions10 import _session_memo
 
-    return _session_memo(
+    return session_memo(
         _BQ_THR_MEMO, spark, sf_dir,
         lambda: local_relation(
             binary_thresholds(vecs), "thr array<double>"

@@ -70,6 +70,29 @@ _PF_DEN = 5
 
 _SIZES_SQL = "sizes AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id)"
 
+
+def _prefix_join_inputs(spark: SparkSession, sf_dir: str):
+    """(shingles, sets) of the planted-dup corpus for the three
+    prefix-join queries: the distinct-shingle sets (id, shset) built
+    ONCE and materialized, and the exploded (id, shingle) frame derived
+    from them — ``word_shingles``'s own definition, so every row is
+    unchanged. Document frequencies, sizes, both prefix self-join sides
+    and the verify joins then read one concrete frame instead of each
+    re-scanning and re-shingling the corpus.
+
+    Deployment caveat (the ``knn_graph`` one): ``localCheckpoint`` is
+    non-reliable storage, so under dynamic allocation / executor
+    decommission a lost executor fails the lineage-truncated job.
+    Cluster deployments that cannot pin executors for the query's
+    duration should persist the sets to reliable storage
+    (``spark.checkpoint`` or a table write) instead."""
+    from blspark.ext.dedup import shingle_sets
+
+    corpus = _corpus(spark, sf_dir, wide=True)
+    sets = shingle_sets(corpus, "doc_id", "text").localCheckpoint(eager=True)
+    return sets.select("id", F.explode("shset").alias("shingle")), sets
+
+
 # Brute-force truth over the planted-dup corpus: full inverted-index
 # pairs + integer-exact threshold. Shared by the main oracle (where it
 # IS the differential: Spark runs the prefix-filtered algorithm, DuckDB
@@ -119,20 +142,13 @@ FROM truth
     "this is pruned AND exact. ext/dedup.prefix_filter_pairs.",
 )
 def x_dedup_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.dedup import (
-        prefix_filter_pairs,
-        shingle_sets,
-        word_shingles,
-    )
+    from blspark.ext.dedup import prefix_filter_pairs
 
-    corpus = _corpus(spark, sf_dir, wide=True)
-    sh = word_shingles(corpus, "doc_id", "text")
+    sh, ss = _prefix_join_inputs(spark, sf_dir)
     # sets: map-side sizes for the candidate stage + array-intersect
     # verify (optimization r16) — same distinct-shingle sets the
     # exploded frame is derived from, so results are identical
-    return prefix_filter_pairs(
-        sh, _PF_NUM, _PF_DEN, sets=shingle_sets(corpus, "doc_id", "text")
-    )
+    return prefix_filter_pairs(sh, _PF_NUM, _PF_DEN, sets=ss)
 
 
 # ---------------------------------------------------------------------------
@@ -233,16 +249,9 @@ SELECT
     "full sum-of-df^2 index blowup on this corpus shape.",
 )
 def x_prefix_join_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.dedup import (
-        prefix_candidates,
-        prefix_filter_pairs,
-        shingle_sets,
-        word_shingles,
-    )
+    from blspark.ext.dedup import prefix_candidates, prefix_filter_pairs
 
-    corpus = _corpus(spark, sf_dir, wide=True)
-    sh = word_shingles(corpus, "doc_id", "text")
-    ss = shingle_sets(corpus, "doc_id", "text")
+    sh, ss = _prefix_join_inputs(spark, sf_dir)
     sizes = sh.groupBy("id").agg(F.count("*").alias("n"))
 
     # brute-force truth with the same integer-exact threshold
@@ -895,15 +904,9 @@ WHERE {_PF_DEN} * i.n_common
     "drifts. ext/dedup.prefix_filter_pairs_incremental.",
 )
 def x_dedup_prefix_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from blspark.ext.dedup import (
-        prefix_filter_pairs_incremental,
-        shingle_sets,
-        word_shingles,
-    )
+    from blspark.ext.dedup import prefix_filter_pairs_incremental
 
-    corpus = _corpus(spark, sf_dir, wide=True)
-    sh = word_shingles(corpus, "doc_id", "text")
-    ss = shingle_sets(corpus, "doc_id", "text")
+    sh, ss = _prefix_join_inputs(spark, sf_dir)
     sh_base = sh.filter(F.col("id") % 3 == 0)
     sh_new = sh.filter(F.col("id") % 3 != 0)
     return prefix_filter_pairs_incremental(

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from blspark.catalog import load_table, o_davg, register
+from blspark.catalog import load_table, o_davg, register, session_memo
 
 # 64-dim embeddings -> 8 subspaces x 8 dims, 4 codewords per subspace.
 _PQ_M = 8
@@ -300,12 +300,12 @@ WHERE rank <= {_PQ_K}
 """
 
 
-# (session applicationId, analyzed-plan semanticHash) -> centroid
-# local_relation. Dead-session entries evicted on sight (the
-# _session_memo convention); distinct corpora (different sf_dir paths,
-# eval-sample filters) hash to distinct plans, so a filtered frame can
-# never be served full-corpus centroids.
-_DET_CENTROIDS_MEMO: dict[tuple[str, int], DataFrame] = {}
+# (session, input plan semanticHash + input-file signatures) -> centroid
+# local_relation, via catalog.session_memo; distinct corpora (different
+# sf_dir paths, eval-sample filters, a table rewritten in place) key
+# distinct entries, so a filtered frame can never be served full-corpus
+# centroids, nor a rewritten corpus its old ones.
+_DET_CENTROIDS_MEMO: dict[tuple, DataFrame] = {}
 
 
 def _det_centroids(emb: DataFrame) -> DataFrame:
@@ -316,45 +316,43 @@ def _det_centroids(emb: DataFrame) -> DataFrame:
     subtree) must run once, not per branch. Shared by the plain and
     residual IVF-PQ queries — one copy of the cell geometry.
 
-    MEMOIZED per (live session, input plan semantic hash) since r14:
-    centroids are a TRAINED ARTIFACT — at deployment they're computed
-    once per corpus and amortized across every query batch, index
-    build and refresh, while this eager helper previously re-ran the
-    corpus aggregation + collect on every one of its ~dozens of call
-    sites per session. The semantic hash of the analyzed plan keys
-    the memo by WHAT the frame computes (path, filters), so the
-    eval-sample bodies (filtered emb) get their own entry and the
-    values served are bit-identical to a fresh computation — the
-    memo changes when, never what."""
+    MEMOIZED per (live session, input plan semantic hash, input-file
+    signatures) since r14: centroids are a TRAINED ARTIFACT — at
+    deployment they're computed once per corpus and amortized across
+    every query batch, index build and refresh, while this eager
+    helper previously re-ran the corpus aggregation + collect on every
+    one of its ~dozens of call sites per session. The semantic hash
+    of the analyzed plan keys the memo by WHAT the frame computes
+    (path, filters), so the eval-sample bodies (filtered emb) get
+    their own entry; the file signatures key it by the content read,
+    so an in-place rewrite of the table trains afresh. The values
+    served are bit-identical to a fresh computation — the memo changes
+    when, never what."""
     from blspark.ops import local_relation
 
-    spark = emb.sparkSession
-    app = spark.sparkContext.applicationId
-    for stale in [k for k in _DET_CENTROIDS_MEMO if k[0] != app]:
-        del _DET_CENTROIDS_MEMO[stale]
-    key = (app, emb._jdf.queryExecution().analyzed().semanticHash())
-    got = _DET_CENTROIDS_MEMO.get(key)
-    if got is not None:
-        return got
-
-    per_pos = (
-        emb.select("label", F.posexplode(F.col("embedding").cast("array<double>")))
-        .groupBy("label", "pos")
-        .agg(F.round(F.avg("col"), 6).alias("m"))
-    )
-    cents_lazy = (
-        per_pos.groupBy("label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"],
-            ).alias("centroid")
+    def build():
+        per_pos = (
+            emb.select(
+                "label", F.posexplode(F.col("embedding").cast("array<double>"))
+            )
+            .groupBy("label", "pos")
+            .agg(F.round(F.avg("col"), 6).alias("m"))
         )
-        .select(F.col("label").alias("cell_id"), "centroid")
+        cents_lazy = (
+            per_pos.groupBy("label")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                    lambda s: s["m"],
+                ).alias("centroid")
+            )
+            .select(F.col("label").alias("cell_id"), "centroid")
+        )
+        return local_relation(cents_lazy, "cell_id int, centroid array<double>")
+
+    return session_memo(
+        _DET_CENTROIDS_MEMO, emb.sparkSession, None, build, frames=(emb,)
     )
-    got = local_relation(cents_lazy, "cell_id int, centroid array<double>")
-    _DET_CENTROIDS_MEMO[key] = got
-    return got
 
 
 @register(

@@ -21,6 +21,7 @@ from blspark.jobs import (
     sync_job,
     tsv_header_schema,
 )
+from tests.conftest import JobCount
 
 BLS_TSV = (
     "series_id        \tyear\tperiod\t       value\tfootnote_codes\n"
@@ -123,35 +124,6 @@ def test_report_on_arrival_trigger(spark, tmp_path):
     )
 
 
-class _JobCount:
-    """Spark jobs launched inside the ``with`` block, counted as
-    perfbench/spans.py counts them: job ids are sequential, so the jobs
-    are the ids after a marker job launched on entry."""
-
-    def __init__(self, spark):
-        self._sc = spark.sparkContext
-        self._tracker = self._sc.statusTracker()
-
-    def _drain(self):
-        # the status tracker is fed from Spark's listener bus
-        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
-
-    def __enter__(self):
-        self._drain()
-        before = set(self._tracker.getJobIdsForGroup(None))
-        self._sc.parallelize([0], 1).count()
-        self._drain()
-        self._marker = max(set(self._tracker.getJobIdsForGroup(None)) - before)
-        return self
-
-    def __exit__(self, *exc):
-        self._drain()
-        last = self._marker
-        while self._tracker.getJobInfo(last + 1) is not None:
-            last += 1
-        self.jobs = last - self._marker
-
-
 def _fetch(mirror, day):
     return fetch_population_job(
         str(mirror),
@@ -172,7 +144,7 @@ def test_report_path_job_budget(spark, tmp_path):
     _fetch(mirror, 1)
     _fetch(mirror, 2)  # two documents: the newest must be found
 
-    with _JobCount(spark) as built:
+    with JobCount(spark) as built:
         reports = report_job(spark, str(mirror))
     assert built.jobs <= 1
     assert reports["population_stats"].first()["year_count"] == 6
@@ -181,7 +153,7 @@ def test_report_path_job_budget(spark, tmp_path):
     run_report_on_arrival(spark, str(mirror), str(ckpt), results)
     seen = len(results)
     _fetch(mirror, 3)
-    with _JobCount(spark) as arrival:
+    with JobCount(spark) as arrival:
         run_report_on_arrival(spark, str(mirror), str(ckpt), results)
     assert arrival.jobs <= 2
     assert len(results) == seen + 1  # one micro-batch for the one arrival
